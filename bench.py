@@ -243,7 +243,7 @@ def main() -> None:
 
         def _build_xl():
             xidx = build_compressed_index_pyfiles(spark, xl_path, cfg)
-            xidx.postings.persist().count()
+            xidx.postings.count()
             return xidx
 
         xlidx = timed("build_webxl", _build_xl)
@@ -371,9 +371,9 @@ def main() -> None:
     n_docs_sf = docs.count()
     seg_cfg = EngineConfig(k1=1.2, b=0.75, k=10, stem=False)
     seg_a = build_compressed_index(spark, docs.filter(F.col("doc_id") < n_docs_sf // 2), seg_cfg)
-    seg_a.postings.persist().count()
+    seg_a.postings.count()
     seg_b = build_compressed_index(spark, docs.filter(F.col("doc_id") >= n_docs_sf // 2), seg_cfg)
-    seg_b.postings.persist().count()
+    seg_b.postings.count()
     timed("merge_segments", lambda: merge_segments([seg_a, seg_b]).postings.count())
     seg_a.postings.unpersist()
     seg_b.postings.unpersist()

@@ -1286,8 +1286,67 @@ def _reencode_postings(postings: DataFrame, block_size: int, codec: str) -> Data
     )
 
 
+# Postings row-group target. The serving readers prune by each row group's
+# footer term [min, max], so a cold query reads about one row group per
+# term; at 1 MiB that read is small, while the footers and row-group
+# framing add <1% to the bytes.
+_POSTINGS_ROW_GROUP_BYTES = 1 << 20
+
+
+def _term_ranges(postings: DataFrame) -> DataFrame:
+    """``postings`` as disjoint, contiguous term ranges, one per shuffle
+    partition, each sorted by term.
+
+    The cut points split a sample of ``32 * spark.sql.shuffle.partitions``
+    terms, the first in ``xxhash64(term)`` order, into equal runs: a bounded
+    driver exchange and a pure function of the postings, unlike
+    ``repartitionByRange``, whose sampler is seeded by the RDD id. Each
+    range is steered to its own partition (two ranges sharing a file would
+    leave a row group straddling the gap, overlapping the range in
+    between). The sort's ``block_first_doc`` tie-break orders a sharded
+    term's rows, so every save of the same postings writes the same bytes.
+    """
+    from fulltextsearch_spark.sources.ingest import (  # noqa: PLC0415
+        bucket_partition_expr,
+        cut_points,
+        range_bucket_expr,
+    )
+
+    n_parts = int(postings.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # a sharded term has several rows, so the sample may hold a few repeats
+    sample = sorted(
+        {
+            r[0]
+            for r in postings.select("term")
+            .orderBy(F.xxhash64("term"), "term")
+            .limit(n_parts * 32)
+            .collect()
+        }
+    )
+    cuts = cut_points(sample, n_parts)
+    n_ranges = len(cuts) + 1
+    return (
+        postings.withColumn("_range", range_bucket_expr("term", cuts))
+        .repartition(n_ranges, bucket_partition_expr(F.col("_range"), n_ranges))
+        .sortWithinPartitions("term", "block_first_doc")
+        .drop("_range")
+    )
+
+
 def save_compressed_index(index: CompressedIndex, root: str, codec: str | None = None) -> None:
-    """Persist under ``root``: postings clustered by term, stats scalars.
+    """Persist under ``root``: postings in term ranges, stats scalars.
+
+    Postings layout: each file holds one contiguous term range, disjoint
+    from every other file's, sorted by term and written in ~1 MiB row
+    groups; the cut points between ranges are a pure function of the
+    postings, so two saves of one index are byte-identical. Row groups'
+    footer term [min, max] ranges therefore do not overlap, except that
+    adjacent row groups of one file share a boundary term whose rows cross
+    between them; a reader that prunes on those statistics
+    (``QueryServer`` and the Spark scan's pushed ``term IN (...)`` filter)
+    reads about one small row group per query term instead of every file.
+    Indexes saved in the earlier hash-partitioned layout load and answer
+    the same, only with less pruning.
 
     ``codec`` re-encodes the posting streams at save time (``"pfor"`` for
     bit-packing, ~0.85x varint bytes measured; ``"ef"`` for Elias-Fano,
@@ -1307,9 +1366,9 @@ def save_compressed_index(index: CompressedIndex, root: str, codec: str | None =
         if index.codec != "varint" or out_codec not in ("pfor", "ef"):
             raise ValueError(f"unsupported re-encode {index.codec!r} -> {out_codec!r}")
         postings = _reencode_postings(postings, index.block_size, out_codec)
-    postings.repartition(F.col("term")).sortWithinPartitions("term").write.mode(
-        "overwrite"
-    ).parquet(f"{root}/postings")
+    _term_ranges(postings).write.option(
+        "parquet.block.size", _POSTINGS_ROW_GROUP_BYTES
+    ).mode("overwrite").parquet(f"{root}/postings")
     index.doc_stats.write.mode("overwrite").parquet(f"{root}/doc_stats")
     spark = index.postings.sparkSession
     spark.createDataFrame(

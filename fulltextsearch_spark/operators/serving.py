@@ -12,17 +12,22 @@ the serving path:
   reference reads one line at a time), so this is not a collect-style
   anti-pattern; it is what turns the term set into a *static* predicate;
 * the needed terms become a ``term IN (...)`` filter that *pushes into the
-  parquet scan* — the index writer clusters rows by term
-  (``save_compressed_index`` repartition+sortWithinPartitions), so footer
-  min/max statistics skip every row group without a matching term. The scan
-  reads O(query terms) row groups out of the whole index;
+  parquet scan* — ``save_compressed_index`` writes each file as one
+  contiguous term range, disjoint from every other file's, sorted by term
+  in ~1 MiB row groups, so row groups' footer term [min, max] ranges
+  overlap only where one term's rows cross a row-group boundary, and the
+  statistics skip every row group that cannot hold a query term. The scan
+  reads about one small row group per query term out of the whole index
+  (an index saved in the older hash-partitioned layout, where every file
+  spans the whole term range, still answers the same but reads every
+  file);
 * one job broadcast-joins the tiny (query_id, term, qtf) frame and runs the
   same block-max MaxScore kernel — results are byte-identical to
   ``search_wand`` (pinned by tests/test_serving.py).
 
 At 100 TB the index is TBs of parquet; this plan still reads only the row
-groups containing the queried terms, which is why serving latency is
-independent of corpus size (modulo posting-list length).
+groups whose term range holds a queried term, which is why serving latency
+is independent of corpus size (modulo posting-list length).
 
 :meth:`QueryServer.search_local` is the interactive fast path: the SAME
 footer-statistics pruning and MaxScore kernel, but executed in-process with
@@ -37,6 +42,7 @@ the Spark path stays the answer for object stores and huge query batches.
 
 from __future__ import annotations
 
+import logging
 from collections import Counter
 from dataclasses import dataclass, field
 
@@ -49,6 +55,12 @@ from fulltextsearch_spark.functions.tokenizer import tokenize
 from fulltextsearch_spark.operators.wand import maxscore_topk, topk_from_joined
 
 __all__ = ["QueryServer"]
+
+_log = logging.getLogger(__name__)
+
+# terms too large for the whole row cache are logged once each, up to this
+# many per server
+_OVERSIZED_LOG_CAP = 1024
 
 # columns the MaxScore kernel needs from a compressed posting row
 _KERNEL_COLS = [
@@ -111,6 +123,7 @@ class QueryServer:
     row_cache_mb: int = 256
     _row_cache: dict = field(default_factory=dict, repr=False)  # term -> (rows, nbytes)
     _row_bytes: int = field(default=0, repr=False)
+    _oversized_logged: set = field(default_factory=set, repr=False)
 
     @classmethod
     def load(cls, spark: SparkSession, root: str) -> "QueryServer":
@@ -186,10 +199,13 @@ class QueryServer:
 
     def _ensure_manifest(self) -> None:
         """One footer-metadata pass over the postings files: per row group,
-        record the term column's min/max statistics (the writer clusters
-        rows by term, so these prune exactly like the Spark scan's
-        PushedFilters do). O(row groups) driver memory — a few dozen bytes
-        per ~128 MB of index."""
+        record the term column's min/max statistics, which prune exactly
+        like the Spark scan's PushedFilters do. ``save_compressed_index``
+        writes disjoint, term-sorted ranges in ~1 MiB row groups, so a
+        missing term falls inside one row group's [min, max] (more only
+        when its own rows span several) and a cold term costs one small
+        read. O(row groups) driver memory — a few
+        dozen bytes per ~1 MiB of index."""
         if self._rg_manifest is not None:
             return
         import os  # noqa: PLC0415
@@ -289,6 +305,19 @@ class QueryServer:
                     self._row_bytes -= self._row_cache.pop(oldest)[1]
                 self._row_cache[t] = (rows, nb)
                 self._row_bytes += nb
+            elif (
+                t not in self._oversized_logged
+                and len(self._oversized_logged) < _OVERSIZED_LOG_CAP
+            ):
+                self._oversized_logged.add(t)
+                _log.warning(
+                    "row cache skips term %r: its rows take %d bytes, over the "
+                    "whole row_cache_mb=%d budget; each query with it re-reads "
+                    "its row groups",
+                    t,
+                    nb,
+                    self.row_cache_mb,
+                )
         return by_term
 
     def _attach_decoded(self, term: str, shard: int, ent: dict) -> None:

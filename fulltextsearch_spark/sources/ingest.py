@@ -19,7 +19,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
@@ -128,6 +128,66 @@ def _partition_exact_keys(n_buckets: int, n_parts: int) -> list[int]:
     return [key_for_partition[b % n_parts] for b in range(n_buckets)]
 
 
+def cut_points(sample: list, n_buckets: int) -> list:
+    """Up to ``n_buckets - 1`` cut points splitting the sorted ``sample``
+    into equal runs; none when the sample is too small to split."""
+    if len(sample) <= n_buckets or n_buckets <= 1:
+        return []
+    step = len(sample) // n_buckets
+    return sample[step::step][: n_buckets - 1]
+
+
+def range_bucket_expr(key_col: str, cuts: list) -> Column:
+    """0-based range bucket of ``key_col``: the number of sorted ``cuts`` <= key.
+
+    A plain expression over literal cut points, so every job that evaluates
+    it agrees on each row's bucket."""
+    if not cuts:
+        return F.lit(0).cast("long")
+    if len(cuts) <= 512:
+        # small cut lists: JVM-side linear count (no Python round trip)
+        return F.size(
+            F.filter(F.array(*[F.lit(c) for c in cuts]), lambda b: F.col(key_col) >= b)
+        ).cast("long")
+    # many buckets (large clusters): an O(cuts)-per-row literal-array scan
+    # and a 10^5-element plan literal are both untenable — vectorized
+    # binary search instead. ArrowEvalPython ships ONLY the key column to
+    # the worker, so the text/html payload never round-trips. Semantics
+    # identical to the linear count: number of cuts <= key (UTF-8 bytes and
+    # code points order strings the same way).
+    cuts_arr = np.array(cuts)
+
+    @pandas_udf(T.LongType())
+    def _bucket_of(keys: pd.Series) -> pd.Series:
+        return pd.Series(
+            np.searchsorted(cuts_arr, keys.to_numpy(dtype=cuts_arr.dtype), side="right").astype(np.int64)
+        )
+
+    return _bucket_of(F.col(key_col))
+
+
+def bucket_partition_expr(bucket: Column, n_buckets: int) -> Column:
+    """Key for ``repartition(n_buckets, key)`` that sends bucket b to shuffle
+    partition b exactly (raw ``hash(b)`` collides buckets into shared
+    partitions). The keys MUST be LongType: Spark's Murmur3 hashes a 4-byte
+    int and an 8-byte long differently, and _murmur3_long models the long
+    layout — an IntegerType key re-collides silently (caught by tests)."""
+    if n_buckets <= 1:
+        return F.lit(0).cast("long")
+    pkeys = _partition_exact_keys(n_buckets, n_buckets)
+    if n_buckets <= 512:
+        return F.element_at(
+            F.array(*[F.lit(k).cast("long") for k in pkeys]), bucket.cast("int") + 1
+        )
+    pkeys_arr = np.array(pkeys, dtype=np.int64)
+
+    @pandas_udf(T.LongType())
+    def _pk_of(buckets: pd.Series) -> pd.Series:
+        return pd.Series(pkeys_arr[buckets.to_numpy(dtype=np.int64)])
+
+    return _pk_of(bucket)
+
+
 def arranged_with_offsets(
     df: DataFrame, order_col: str = "url", num_partitions: int | None = None
 ) -> tuple[DataFrame, dict[int, int]]:
@@ -176,37 +236,9 @@ def arranged_with_offsets(
         r[0]
         for r in df.select(order_col).orderBy(F.rand(42)).limit(n_buckets * 32).collect()
     )
-    if len(sample) > n_buckets and n_buckets > 1:
-        step = len(sample) // n_buckets
-        cuts = sample[step::step][: n_buckets - 1]
-    else:
-        cuts = []
+    cuts = cut_points(sample, n_buckets)
 
-    if not cuts:
-        bucket_expr = F.lit(0).cast("long")
-    elif len(cuts) <= 512:
-        # small cut lists: JVM-side linear count (no Python round trip)
-        bucket_expr = F.size(
-            F.filter(
-                F.array(*[F.lit(c) for c in cuts]), lambda b: F.col(order_col) >= b
-            )
-        ).cast("long")
-    else:
-        # many buckets (large clusters): an O(cuts)-per-row literal-array scan
-        # and a 10^5-element plan literal are both untenable — vectorized
-        # binary search instead. ArrowEvalPython ships ONLY the key column to
-        # the worker, so the text/html payload never round-trips. Semantics
-        # identical to the linear count: number of cuts <= key (ASCII keys
-        # compare the same bytewise and by codepoint).
-        cuts_arr = np.array(cuts)
-
-        @pandas_udf(T.LongType())
-        def _bucket_of(keys: pd.Series) -> pd.Series:
-            return pd.Series(
-                np.searchsorted(cuts_arr, keys.to_numpy(dtype=cuts_arr.dtype), side="right").astype(np.int64)
-            )
-
-        bucket_expr = _bucket_of(F.col(order_col))
+    bucket_expr = range_bucket_expr(order_col, cuts)
 
     counts = {
         int(r["_b"]): r["cnt"]
@@ -221,25 +253,7 @@ def arranged_with_offsets(
         offsets[b] = acc
         acc += counts[b]
 
-    # steer bucket b to shuffle partition b exactly (raw hash(_b) collides).
-    # The keys MUST be LongType: Spark's Murmur3 hashes a 4-byte int and an
-    # 8-byte long differently, and _murmur3_long models the long layout —
-    # an IntegerType pk re-collides silently (caught by tests).
-    pkeys = _partition_exact_keys(n_buckets, n_buckets)
-    if n_buckets <= 1:
-        pk_expr = F.lit(0).cast("long")
-    elif n_buckets <= 512:
-        pk_expr = F.element_at(
-            F.array(*[F.lit(k).cast("long") for k in pkeys]), F.col("_b").cast("int") + 1
-        )
-    else:
-        pkeys_arr = np.array(pkeys, dtype=np.int64)
-
-        @pandas_udf(T.LongType())
-        def _pk_of(buckets: pd.Series) -> pd.Series:
-            return pd.Series(pkeys_arr[buckets.to_numpy(dtype=np.int64)])
-
-        pk_expr = _pk_of(F.col("_b"))
+    pk_expr = bucket_partition_expr(F.col("_b"), n_buckets)
     arranged = (
         df.withColumn("_b", bucket_expr)
         .withColumn("_pk", pk_expr)

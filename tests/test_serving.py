@@ -5,11 +5,16 @@ results rank-identical to search_wand.
 
 from __future__ import annotations
 
+import contextlib
+import logging
 import os
 
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from fulltextsearch_spark.config import EngineConfig
+from fulltextsearch_spark.operators import compressed_index
 from fulltextsearch_spark.operators.compressed_index import (
     build_compressed_index,
     load_compressed_index,
@@ -24,13 +29,17 @@ CFG = EngineConfig(k1=1.2, b=0.75, k=10, block_size=32)
 
 
 @pytest.fixture(scope="module")
-def index_root(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("serve_idx"))
+def built_index(spark):
     docs = assign_dense_doc_ids(
         generate_webpages(spark, 400, seed=23).select("url", "text"), order_col="url"
     )
-    cidx = build_compressed_index(spark, docs, CFG)
-    save_compressed_index(cidx, path)
+    return build_compressed_index(spark, docs, CFG)
+
+
+@pytest.fixture(scope="module")
+def index_root(built_index, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("serve_idx"))
+    save_compressed_index(built_index, path)
     return path
 
 
@@ -318,3 +327,127 @@ def test_search_local_parallel_workers_identical(spark, tmp_path):
     assert pooled.search_local(QUERY_SET, cfg, workers=4) == base_cold
     assert pooled.search_local(QUERY_SET, cfg, workers=4) == base_warm
     assert pooled.search_local(QUERY_SET, cfg, workers=4) == base_warm  # cached
+
+
+@contextlib.contextmanager
+def _spark_conf(spark, conf: dict[str, str]):
+    """Set runtime SQL confs for the block, then restore the old values."""
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _postings_files(root) -> list[str]:
+    pdir = os.path.join(root, "postings")
+    return [os.path.join(pdir, f) for f in sorted(os.listdir(pdir)) if f.endswith(".parquet")]
+
+
+def _term_ranges_of(root) -> list[tuple[str, str, int]]:
+    """Footer term (min, max, file number) of every postings row group."""
+    out = []
+    for f, path in enumerate(_postings_files(root)):
+        meta = pq.ParquetFile(path).metadata
+        col = meta.schema.names.index("term")
+        for rg in range(meta.num_row_groups):
+            st = meta.row_group(rg).column(col).statistics
+            out.append((st.min, st.max, f))
+    return out
+
+
+@pytest.fixture
+def small_row_groups(monkeypatch):
+    """Save postings in ~4 KiB row groups, so the small test index spans
+    several row groups per file."""
+    monkeypatch.setattr(compressed_index, "_POSTINGS_ROW_GROUP_BYTES", 4 << 10)
+
+
+def test_saved_postings_are_disjoint_term_ranges(
+    spark, built_index, tmp_path, monkeypatch, small_row_groups
+):
+    """Files cover disjoint term ranges and row groups overlap only on a
+    boundary term whose rows cross between adjacent row groups of one file,
+    so a one-term cold query reads exactly one row group."""
+    root = str(tmp_path / "idx")
+    with _spark_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
+        save_compressed_index(built_index, root)
+    files = _postings_files(root)
+    assert len(files) >= 2
+    assert all(pq.ParquetFile(p).metadata.num_row_groups > 1 for p in files)
+    ranges = sorted(_term_ranges_of(root))
+    assert all(lo <= hi for lo, hi, _ in ranges)
+    for a, b in zip(ranges, ranges[1:]):
+        assert a[1] < b[0] or (a[1] == b[0] and a[2] == b[2]), (a, b)
+
+    reads = []
+    real_read = pq.ParquetFile.read_row_group
+
+    def counting_read(self, i, *args, **kwargs):
+        reads.append(i)
+        return real_read(self, i, *args, **kwargs)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_group", counting_read)
+    server = QueryServer.load(spark, root)
+    assert sum(lo <= "cat" <= hi for lo, hi, _ in ranges) == 1
+    assert server.search_local([("q", "cat")], CFG)
+    assert len(reads) == 1
+
+
+def test_save_is_byte_identical(spark, built_index, tmp_path, small_row_groups):
+    """Two saves of one index write the same postings bytes: the range cut
+    points are a pure function of the postings."""
+    roots = [str(tmp_path / "a"), str(tmp_path / "b")]
+    with _spark_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
+        for root in roots:
+            save_compressed_index(built_index, root)
+    a, b = ([open(p, "rb").read() for p in _postings_files(r)] for r in roots)
+    assert len(a) >= 2 and a == b
+
+
+def test_hash_layout_index_answers_like_range_layout(spark, built_index, index_root, tmp_path):
+    """An index whose postings were saved in the earlier layout (hash-
+    partitioned by term, every file spanning the whole term range) loads
+    unchanged and answers QUERY_SET exactly like the range layout."""
+    old_root = str(tmp_path / "hash_idx")
+    save_compressed_index(built_index, old_root)
+    with _spark_conf(spark, {"spark.sql.adaptive.coalescePartitions.enabled": "false"}):
+        built_index.postings.repartition(F.col("term")).sortWithinPartitions(
+            "term"
+        ).write.mode("overwrite").parquet(f"{old_root}/postings")
+    old_ranges = sorted(_term_ranges_of(old_root))
+    assert any(a[1] >= b[0] for a, b in zip(old_ranges, old_ranges[1:]))
+
+    def local(root):
+        return sorted(
+            (q, r, d, round(s, 9))
+            for q, r, d, s in QueryServer.load(spark, root).search_local(QUERY_SET, CFG)
+        )
+
+    def spark_path(root):
+        return _key(QueryServer.load(spark, root).search(QUERY_SET, CFG).collect())
+
+    want = local(index_root)
+    assert want and local(old_root) == want
+    assert spark_path(old_root) == spark_path(index_root) == want
+
+
+def test_oversized_row_cache_term_logged_once(spark, index_root, caplog):
+    """A term too large for the whole row cache is never cached; the server
+    logs it once, not once per query."""
+    server = QueryServer.load(spark, index_root)
+    server.row_cache_mb = 0
+    with caplog.at_level(logging.WARNING, logger="fulltextsearch_spark.operators.serving"):
+        server.search_local(QUERY_SET, CFG)
+        first = [r for r in caplog.records if "row cache skips term" in r.getMessage()]
+        server.search_local(QUERY_SET, CFG)
+        both = [r for r in caplog.records if "row cache skips term" in r.getMessage()]
+    assert first and both == first
+    assert len({r.args[0] for r in first}) == len(first)
+    assert not server._row_cache
